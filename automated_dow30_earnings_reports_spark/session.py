@@ -16,6 +16,18 @@ from pyspark.sql import SparkSession
 # Number of local cores the harness gives us (driver contract).
 _CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
+# Entries in Spark's generated-class cache (``CodeGenerator``; Spark's
+# default is 100). One long-lived session serves a recurring query mix,
+# and a cache smaller than that mix's working set evicts each class
+# before its query comes back: every run then recompiles its operators
+# with Janino and runs their loops in fresh classes the JIT has not yet
+# optimised. One sf0.001 pass over the 267-query registry generates
+# about 3.3k distinct classes (the 11-query perfbench analyst deck about
+# 311); 4096 is the smallest power of two at which a second pass
+# compiles almost nothing (see PERF.md). Cost with the cache full:
+# about +20 MB JVM Metaspace and +12 MB code cache.
+_CODEGEN_CACHE_ENTRIES = 4096
+
 
 def get_spark(app_name: str = "dow30-spark-engine", shuffle_partitions: int | None = None) -> SparkSession:
     """Build (or fetch) the engine's SparkSession.
@@ -31,6 +43,11 @@ def get_spark(app_name: str = "dow30-spark-engine", shuffle_partitions: int | No
       - Arrow enabled so the few pandas-UDF operators (similarity, text
         stats fallbacks, multimodal decode) move columns in batches, not
         pickled rows.
+      - The whole-stage-codegen class cache is sized to the registry's
+        working set (``_CODEGEN_CACHE_ENTRIES``). On a cluster every
+        executor JVM holds its own cache, so the same sizing applies
+        there: a recurring query mix whose classes outnumber the cache
+        recompiles them on every executor, every time.
     """
     active = SparkSession.getActiveSession()
     if active is not None:
@@ -76,5 +93,7 @@ def get_spark(app_name: str = "dow30-spark-engine", shuffle_partitions: int | No
         .config("spark.sql.python.filterPushdown.enabled", "true")
         # Arrow-batched Python UDTF eval (functions/udtfs.py)
         .config("spark.sql.execution.pythonUDTF.arrow.enabled", "true")
+        # Static conf: read once, when the JVM first generates code.
+        .config("spark.sql.codegen.cache.maxEntries", str(_CODEGEN_CACHE_ENTRIES))
     )
     return builder.getOrCreate()

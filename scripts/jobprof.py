@@ -1,7 +1,7 @@
 """Per-JOB breakdown of one query via the Spark event log.
 
-Creates a session with the engine's exact knobs (session.py) plus
-eventLog, runs the query once at the given sf (after a sf0.001 warm
+Creates the engine's session (session.get_spark) with the event log
+on, runs the query once at the given sf (after a sf0.001 warm
 pass), then parses the event log into a job table: job id, description,
 wall ms, number of stages/tasks. This is the 'which of the 20 actions
 inside this lifecycle verb is slow' tool the Spark UI would be.
@@ -40,29 +40,17 @@ def main() -> int:
     shutil.rmtree(EVDIR, ignore_errors=True)
     os.makedirs(EVDIR, exist_ok=True)
 
-    from pyspark.sql import SparkSession
-
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = (
-        SparkSession.builder.appName("jobprof")
-        .master(f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.parquet.filterPushdown", "true")
-        .config("spark.sql.python.filterPushdown.enabled", "true")
-        .config("spark.sql.execution.pythonUDTF.arrow.enabled", "true")
-        .config("spark.eventLog.enabled", "true")
-        .config("spark.eventLog.dir", EVDIR)
-        .config("spark.eventLog.compress", "false")
-        .config("spark.eventLog.rolling.enabled", "false")
-        .getOrCreate()
+    # The engine's session, built by get_spark() itself so this profile
+    # runs with exactly its settings; the event log is switched on at JVM
+    # launch, the one place it can be added without copying them.
+    os.environ["PYSPARK_SUBMIT_ARGS"] = (
+        f"--conf spark.eventLog.enabled=true --conf spark.eventLog.dir={EVDIR}"
+        " --conf spark.eventLog.compress=false"
+        " --conf spark.eventLog.rolling.enabled=false pyspark-shell"
     )
+    from automated_dow30_earnings_reports_spark.session import get_spark
+
+    spark = get_spark("jobprof")
 
     import __spark_entry__ as entrymod
 

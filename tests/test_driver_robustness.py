@@ -25,6 +25,24 @@ def test_rerun_same_session_is_idempotent(spark, sf_smoke):
     assert first == second and first
 
 
+def test_rerun_compiles_no_generated_code(spark, sf_smoke):
+    """A query that comes back finds its generated classes still cached.
+    These three generate about 141 classes together, more than Spark's
+    default cache of 100 entries, which would evict each pass's classes
+    before the next pass and recompile them all."""
+    import __spark_entry__ as e
+
+    qs = e.queries()
+    deck = [qs[n] for n in ("similarity_pq_adc", "dedup_minhash_lsh", "tfidf_top_terms")]
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    for q in deck:
+        q(spark, sf_smoke).collect()
+    before = compiles.getCount()
+    for q in deck:
+        q(spark, sf_smoke).collect()
+    assert compiles.getCount() - before == 0
+
+
 @pytest.mark.parametrize(
     "name",
     [

@@ -3,6 +3,8 @@ our scans, value-identical."""
 
 from __future__ import annotations
 
+import json
+
 import pytest
 
 from pyspark.sql import functions as F
@@ -47,8 +49,59 @@ def test_excel_sink_gated(spark, tmp_path):
         assert (tmp_path / "dims.xlsx").exists()
 
 
+def _run_ledger(tmp_path) -> str:
+    """A run ledger in the reference's layout: one pretty-printed
+    ``company_run_metadata`` document per file (FIXTURES.md §B), with the
+    string year/quarter of ``downloaded_files``, a failed run with no
+    files, and a nullable checksum. Returns a glob over the documents."""
+    runs = [
+        ("Apple", "AAPL", "completed", None, 14, [("2025", "3"), ("2025", "2")]),
+        ("Travelers Companies, Inc.", "TRV", "completed", None, 9, [("2024", "4")]),
+        ("Boeing", "BA", "failed", "timeout after 3 retries", 2, []),
+    ]
+    d = tmp_path / "metadata"
+    d.mkdir()
+    for company, ticker, status, error, found, files in runs:
+        doc = {
+            "company": company,
+            "ticker": ticker,
+            "ir_url": f"https://investors.{ticker.lower()}.com",
+            "pipeline_start_time": "2025-10-10T14:20:01",
+            "pipeline_end_time": "2025-10-10T14:28:49",
+            "status": status,
+            "error_message": error,
+            "scraping_start_time": "2025-10-10T14:20:02",
+            "scraping_end_time": "2025-10-10T14:23:40",
+            "urls_visited": found + 3,
+            "urls_found": found,
+            "extraction_start_time": None,
+            "extraction_end_time": None,
+            "model_used": None,
+            "download_start_time": "2025-10-10T14:25:00",
+            "download_end_time": "2025-10-10T14:28:48",
+            "downloaded_files": [
+                {
+                    "title": f"{ticker} Q{q} {y} Earnings Release",
+                    "size": 100_000 * i + 2_048,
+                    "checksum": None if i else "0cc175b9c0f1b6a831c399e269772661",
+                    "quarter": q,
+                    "year": y,
+                    "url": f"https://investors.{ticker.lower()}.com/q{q}-{y}.pdf",
+                    "download_timestamp": "2025-10-10T14:26:11",
+                    "source_page": f"https://investors.{ticker.lower()}.com",
+                    "file_type": "pdf",
+                }
+                for i, (y, q) in enumerate(files)
+            ],
+        }
+        (d / f"metadata_{ticker}_20251010_142849.json").write_text(
+            json.dumps(doc, indent=2)
+        )
+    return str(d / "*.json")
+
+
 def test_ledger_json_roundtrip(spark, tmp_path):
-    src = read_ledger(spark, "/root/reference/metadata/*.json")
+    src = read_ledger(spark, _run_ledger(tmp_path))
     out = str(tmp_path / "ledger_json")
     write_ledger(src, out)
     # write_ledger emits line-delimited JSON — read back in JSONL mode
@@ -178,5 +231,5 @@ def test_ledger_multiline_contract(spark, tmp_path):
     assert read_ledger(spark, out, multiline=True).count() == 1
     # and the reference's actual layout (pretty, one doc per file) needs
     # multiline=True — JSONL mode would see corrupt per-line fragments
-    ref = read_ledger(spark, "/root/reference/metadata/*.json", multiline=True)
+    ref = read_ledger(spark, _run_ledger(tmp_path), multiline=True)
     assert ref.filter(ref.company.isNotNull()).count() == ref.count() > 0
